@@ -3,10 +3,10 @@
     spark-submit --py-files kg.zip kg/main.py \
         --input  /path/or/catalog.db.transcripts \
         --output /path/or/catalog.db \
-        [--checkpoint /path/ckpt] [--resume] [--buckets 64]
+        [--checkpoint /path/ckpt] [--buckets 64]
 
-``--resume`` is implied whenever a checkpoint manifest for the same
-input snapshot exists — committed buckets are never recomputed.
+With ``--checkpoint``, a rerun over the same input snapshot resumes
+from the manifest — committed buckets are never recomputed.
 """
 
 from __future__ import annotations
@@ -45,9 +45,6 @@ def main(argv: list[str] | None = None) -> None:
                          "(system preambles / canned banners) before "
                          "extraction; 0 = off. The hot-text set is "
                          "broadcast, so the turn table is not shuffled")
-    ap.add_argument("--resume", action="store_true",
-                    help="(informational; resume is automatic when the "
-                         "manifest matches the input snapshot)")
     args = ap.parse_args(argv)
 
     from kg import pipeline  # after session deps

@@ -5,9 +5,8 @@ execution for kill/resume (E2/A5).
 Dataflow at scale (the plan you'd want on 1000 executors):
 
     scan T0 (pruned to conv_id, turn_idx, text)
-      → mapInPandas extract (B1–B3; narrow, no shuffle)
-      → mapInPandas score   (B4; narrow, broadcast model, Arrow-capped)
-      → 2 × broadcast join  (B5 dictionary linking; no shuffle)
+      → mapInPandas extract+score+link (B1–B5 fused; narrow, broadcast
+        model, Arrow-capped, exact dictionary linking in-UDF)
       → [distinct norms → minhash/LSH/CC — tiny side plan on the
          dictionary-miss tail only]
       → groupBy(subj,pred,obj) agg (D2; the ONE unavoidable shuffle,
@@ -30,34 +29,20 @@ from kg import spec
 from kg.stages import canon, checkpoint, link, metrics, score, triples
 
 
-def resolve_entities(scored: DataFrame, dict_df: DataFrame,
-                     canonicalize_tail: bool = True) -> DataFrame:
-    """B5 + C1–C4: exact-dictionary linking (broadcast joins), then
-    long-tail canonicalization of dictionary-miss norms via
+def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
+    """C1–C4: long-tail canonicalization of dictionary-miss norms via
     minhash/LSH + connected components.
 
-    Callers must pass a MATERIALIZED ``scored`` frame (checkpointed or
-    parquet-backed): this function scans it multiple times (linking,
-    miss-detection, final join), and re-running the scoring UDF per
+    ``scored`` must carry ``head_entity``/``tail_entity`` — the exact
+    dictionary link (B5), null on a miss — as the fused scorers emit
+    them. Callers must pass a MATERIALIZED frame (checkpointed or
+    parquet-backed): this function scans it multiple times
+    (miss-detection, final join), and re-running the scoring UDF per
     scan would multiply the Python-path cost.
-
-    If the frame already carries head_entity/tail_entity (the fused
-    extractor resolves the exact dictionary in-UDF), the broadcast
-    linking joins are skipped and only the miss tail is processed.
     """
-    if "head_entity" in scored.columns:
-        linked = scored
-    else:
-        linked = link.link_instances(scored, dict_df)
-    if not canonicalize_tail:
-        return (linked
-                .withColumn("head_entity",
-                            F.coalesce("head_entity", "head_norm"))
-                .withColumn("tail_entity",
-                            F.coalesce("tail_entity", "tail_norm")))
     # single scan for BOTH miss sides: explode the two nullable slots
     # and keep the null ones (round 1 ran two where-scans + union)
-    missed = (linked.select(F.explode(F.array(
+    missed = (scored.select(F.explode(F.array(
                   F.when(F.col("head_entity").isNull(), F.col("head_norm")),
                   F.when(F.col("tail_entity").isNull(), F.col("tail_norm"))))
               .alias("norm"))
@@ -68,14 +53,14 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame,
         # common fast path: every mention linked exactly — skip the
         # whole minhash/CC side plan (it would still cost a dozen
         # empty jobs in the iterative loop)
-        return linked
+        return scored
     # The cluster graph must CONTAIN the dictionary norms, or a typo
     # variant can never share a component with a linked member and
     # C4's "cluster inherits the canonical of its linked member" is
     # dead code — every miss would fall back to its cluster-min norm.
     # The dictionary is a few hundred rows: unioning it into the node
     # set costs nothing; its own mappings are dropped afterwards
-    # (dict norms are already resolved in `linked`).
+    # (dict norms are already resolved in `scored`).
     nodes = missed.union(dict_df.select("norm")).distinct()
     mapping = (canon.canonicalize_norms(nodes, dict_df)
                .join(missed, "norm", "left_semi"))
@@ -84,7 +69,7 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame,
                                    F.col("entity").alias("_h_ent")))
     t = F.broadcast(mapping.select(F.col("norm").alias("tail_norm"),
                                    F.col("entity").alias("_t_ent")))
-    return (linked.join(h, "head_norm", "left").join(t, "tail_norm", "left")
+    return (scored.join(h, "head_norm", "left").join(t, "tail_norm", "left")
             .withColumn("head_entity",
                         F.coalesce("head_entity", "_h_ent", "head_norm"))
             .withColumn("tail_entity",
@@ -115,15 +100,8 @@ def extract_and_score(spark: SparkSession, transcripts: DataFrame,
     # mapInPandas (pairing + scoring + exact linking in the same
     # Python worker — was three chained stages with token_ids paying
     # an extra Arrow round-trip, then two broadcast joins), unioned
-    # with the shuffle-free intra pass. Measured on local[32]: this
-    # union shape beats the single-scan alternative
-    # (score.extract_and_score_conv_fused — one scan, one tokenize,
-    # but ALL Python work serialized into the post-shuffle stage) by
-    # ~25% because the two passes are independent stages Spark
-    # overlaps; prefer conv_fused only when the SCAN dominates (very
-    # wide rows / remote object store), not when extraction CPU does.
-    # All three surfaces are equivalence-pinned in
-    # tests/test_extract_score.py.
+    # with the shuffle-free intra pass; both fused scorers are
+    # equivalence-pinned in tests/test_extract_score.py.
     # clustered_input: the caller vouches the storage layout contains
     # each conversation in one scan partition (conv-bucketed write /
     # Iceberg bucket(conv_id)); the cross-turn pass then runs with NO

@@ -17,9 +17,11 @@
   the deduped pairs and computes exact Jaccard in the JVM
   (``array_intersect``; |A∪B| = |A|+|B|−|A∩B|).
 - C3: iterative connected components, hash-to-min message passing
-  (GraphFrames-style on plain DataFrames; Kiveris et al. SoCC 2014
-  family). Driver loop with ``localCheckpoint`` per iteration to
-  truncate lineage — without it the plan grows exponentially.
+  (GraphFrames-style on plain DataFrames), escalating to
+  large/small-star (Kiveris et al. SoCC 2014) when hash-to-min finds
+  no fixpoint within ``HASH_TO_MIN_ROUNDS``. Driver loop with
+  ``localCheckpoint`` per iteration to truncate lineage — without it
+  the plan grows exponentially.
 - C4: cluster naming — a cluster inherits the canonical name of its
   lexicographically-first dictionary-linked member, else its
   lexicographically-first norm (fully deterministic).
@@ -433,9 +435,20 @@ def simhash_near_pairs(sims: DataFrame, id_col: str = "doc_id",
             .dropDuplicates(["src", "dst"]))
 
 
-def connected_components(nodes: DataFrame, edges: DataFrame,
-                         max_iter: int = 64) -> DataFrame:
-    """C3: hash-to-min label propagation to a fixpoint.
+#: hash-to-min rounds :func:`connected_components` runs before it
+#: escalates to large/small-star. Entity-variant clusters converge in
+#: 2–4 rounds, so only a long-diameter graph ever reaches the bound.
+HASH_TO_MIN_ROUNDS = 64
+
+#: large/small-star round bound. Star rounds grow as O(log² n), about
+#: log n in practice, so a graph that hits it gets a RuntimeError
+#: rather than wrong labels.
+STAR_ROUNDS = 20
+
+
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """C3: hash-to-min label propagation to a fixpoint, escalating to
+    :func:`connected_components_star` when there is none.
 
     ``nodes``: (node) — every vertex, including singletons.
     ``edges``: (src, dst). Returns (node, component) with component =
@@ -445,7 +458,10 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     neighbors; labels = min(own, proposals). Converges in O(diameter)
     iterations; entity-variant clusters are tiny, so this is 2–4
     rounds in practice. localCheckpoint per round keeps the plan flat
-    (SURVEY.md §4).
+    (SURVEY.md §4). A graph still changing after
+    ``HASH_TO_MIN_ROUNDS`` rounds (a long chain) is handed to
+    large/small-star, which needs O(log²) rounds whatever the
+    diameter — the round count picks the algorithm, not the caller.
 
     r6 round shape (the kg/stages/graph.py discipline): the
     symmetrized edge multiset is grouped ONCE into per-src adjacency
@@ -484,7 +500,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         return (r["s"], r["n"])
 
     prev = _sig(labels)
-    for _ in range(max_iter):
+    for _ in range(HASH_TO_MIN_ROUNDS):
         labels = (adj.join(labels, adj.src == labels.node)
                   .select(F.explode("_dsts").alias("node"), "component")
                   .groupBy("node")
@@ -492,20 +508,11 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                   .localCheckpoint())
         cur = _sig(labels)
         if cur == prev:
-            break
+            return labels
         prev = cur
-    else:
-        # Silent truncation would return WRONG labels (stale
-        # components) and surface only as a downstream mismatch.
-        # Converged-early costs nothing, so the default is generous
-        # (64 ≥ any plausible entity-cluster diameter); a graph that
-        # genuinely exceeds it should switch to the O(log²)-round
-        # star variant, not get a quietly wrong answer.
-        raise RuntimeError(
-            f"connected_components: no fixpoint after {max_iter} "
-            "rounds (graph diameter exceeds max_iter); raise "
-            "max_iter or use connected_components_star")
-    return labels
+    # truncating here would return stale labels; star restarts from
+    # the input edges and converges in O(log²) rounds
+    return connected_components_star(nodes, edges)
 
 
 def components_auto(nodes: DataFrame, edges: DataFrame,
@@ -536,58 +543,36 @@ def components_auto(nodes: DataFrame, edges: DataFrame,
         driver_max_nodes = DRIVER_CANON_MAX_NODES
     if driver_max_edges is None:
         driver_max_edges = DRIVER_CANON_MAX_EDGES
-    if driver_max_nodes > 0:
-        node_rows = (nodes.select("node")
-                     .limit(driver_max_nodes + 1).collect())
-        if len(node_rows) <= driver_max_nodes:
-            edge_rows = (edges.select("src", "dst")
-                         .limit(driver_max_edges + 1).collect())
-            if len(edge_rows) <= driver_max_edges:
-                # dedup while preserving order — the distributed
-                # groupBy dedups too, so duplicate node rows must not
-                # change the output shape between branches
-                ids = list(dict.fromkeys(r["node"] for r in node_rows))
-                parent = {n: n for n in ids}
-
-                def find(x):
-                    while parent[x] != x:
-                        parent[x] = parent[parent[x]]
-                        x = parent[x]
-                    return x
-
-                for r in edge_rows:
-                    if r["src"] not in parent or r["dst"] not in parent:
-                        continue
-                    a, b = find(r["src"]), find(r["dst"])
-                    if a != b:
-                        # keep the minimum as the root → component id
-                        if a < b:
-                            parent[b] = a
-                        else:
-                            parent[a] = b
-                node_field = nodes.select("node").schema.fields[0]
-                schema = StructType([
-                    node_field,
-                    StructField("component", node_field.dataType)])
-                # pandas in, so the round-trip ships via Arrow —
-                # createDataFrame(list-of-tuples) pickles row by row
-                # (~4× slower at the 100k-node probe bound)
-                return nodes.sparkSession.createDataFrame(
-                    pd.DataFrame({"node": ids,
-                                  "component": [find(n) for n in ids]}),
-                    schema)
+    probe = _driver_probe(nodes.select("node"), edges,
+                          driver_max_nodes, driver_max_edges)
+    if probe is not None:
+        node_rows, edge_rows = probe
+        # duplicate node rows collapse here, as in the distributed
+        # groupBy, so the output shape matches between branches
+        roots = _min_roots((r["node"] for r in node_rows), edge_rows)
+        node_field = nodes.select("node").schema.fields[0]
+        schema = StructType([
+            node_field, StructField("component", node_field.dataType)])
+        # pandas in, so the round-trip ships via Arrow —
+        # createDataFrame(list-of-tuples) pickles row by row
+        # (~4× slower at the 100k-node probe bound)
+        return nodes.sparkSession.createDataFrame(
+            pd.DataFrame({"node": list(roots),
+                          "component": list(roots.values())}),
+            schema)
     return connected_components(nodes, edges)
 
 
-def connected_components_star(nodes: DataFrame, edges: DataFrame,
-                              max_iter: int = 20) -> DataFrame:
-    """C3 alternative: alternating large-star / small-star
+def connected_components_star(nodes: DataFrame,
+                              edges: DataFrame) -> DataFrame:
+    """C3 escalation path: alternating large-star / small-star
     (Kiveris et al., SoCC 2014). Same contract as
-    :func:`connected_components`; converges in O(log²) rounds even on
+    :func:`connected_components`, which calls it when hash-to-min
+    finds no fixpoint; converges in O(log²) rounds even on
     pathological long chains, where hash-to-min needs O(diameter)
-    rounds. Prefer this when cluster diameters are unknown; the
-    default hash-to-min is cheaper per round for the tiny-diameter
-    entity-variant clusters the pipeline produces.
+    rounds. Hash-to-min stays the first choice because it is cheaper
+    per round for the tiny-diameter entity-variant clusters the
+    pipeline produces.
 
     large-star: every node u connects each STRICTLY-LARGER neighbor v
     to min(N⁺(u) ∪ {u}); small-star: every node u connects each
@@ -629,7 +614,7 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
          .where(F.col("src") != F.col("dst"))
          .dropDuplicates(["src", "dst"]).localCheckpoint())
     prev = None
-    for _ in range(max_iter):
+    for _ in range(STAR_ROUNDS):
         e = large_star(e).localCheckpoint()
         e = small_star(e).localCheckpoint()
         chk = e.select(F.sum(F.xxhash64("src", "dst")
@@ -642,8 +627,8 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
     else:
         raise RuntimeError(
             f"connected_components_star: edge multiset not stable "
-            f"after {max_iter} large/small-star rounds — wrong "
-            "labels would follow; raise max_iter")
+            f"after {STAR_ROUNDS} large/small-star rounds — wrong "
+            "labels would follow")
     # at fixpoint every node points directly at its component minimum
     labels = e.select(F.col("src").alias("node"),
                       F.col("dst").alias("component"))
@@ -665,6 +650,44 @@ DRIVER_CANON_MAX_NODES = 100_000
 #: The edge probe collects at most this many +1 rows; one more and the
 #: distributed branch runs instead.
 DRIVER_CANON_MAX_EDGES = 1_000_000
+
+
+def _driver_probe(nodes: DataFrame, edges: DataFrame, max_nodes: int,
+                  max_edges: int) -> tuple[list, list] | None:
+    """The driver fast-path size probe: collect up to ``max_nodes`` + 1
+    rows of ``nodes``, then up to ``max_edges`` + 1 (src, dst) rows of
+    ``edges``. Returns (node_rows, edge_rows), or None when either
+    bound is exceeded (or ``max_nodes`` ≤ 0) — the edge probe matters
+    because node count alone doesn't bound the edge set."""
+    if max_nodes <= 0:
+        return None
+    node_rows = nodes.limit(max_nodes + 1).collect()
+    if len(node_rows) > max_nodes:
+        return None
+    edge_rows = edges.select("src", "dst").limit(max_edges + 1).collect()
+    if len(edge_rows) > max_edges:
+        return None
+    return node_rows, edge_rows
+
+
+def _min_roots(ids, pairs) -> dict:
+    """Driver union-find: each distinct id (first-seen order) → the
+    minimum id of its component. Pairs with an endpoint outside
+    ``ids`` are skipped."""
+    parent = {n: n for n in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, d in pairs:
+        if s in parent and d in parent:
+            a, b = find(s), find(d)
+            if a != b:
+                parent[max(a, b)] = min(a, b)
+    return {n: find(n) for n in parent}
 
 
 def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
@@ -690,25 +713,28 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
     banded = lsh_bands(minhash_signatures(feats)).persist()
     edges = verify_pairs(candidate_pairs(banded), feats)
 
-    if driver_max_nodes > 0:
-        probe = (feats.select("norm", "node")
-                 .limit(driver_max_nodes + 1).collect())
-        if len(probe) <= driver_max_nodes:
-            # probe the EDGE count too: node count alone doesn't bound
-            # it — a dense near-dup graph can emit ~10⁸ verified pairs
-            # from 100k nodes and OOM the driver on collect()
-            edge_rows = (edges.select("src", "dst")
-                         .limit(driver_max_edges + 1).collect())
-            if len(edge_rows) <= driver_max_edges:
-                spark = norms.sparkSession
-                dict_rows = dict_df.select("norm", "entity").collect()
-                mapping = _name_clusters_driver(
-                    [(r["norm"], r["node"]) for r in probe],
-                    [(r["src"], r["dst"]) for r in edge_rows],
-                    {r["norm"]: r["entity"] for r in dict_rows})
-                return spark.createDataFrame(
-                    pd.DataFrame(mapping, columns=["norm", "entity"]),
-                    "norm string, entity string")
+    probe = _driver_probe(feats.select("norm", "node"), edges,
+                          driver_max_nodes, driver_max_edges)
+    if probe is not None:
+        # driver C4: the distributed branch's naming rule below —
+        # own dict hit, else the dict entity of the cluster's
+        # lexicographically-first LINKED norm, else the cluster's
+        # lexicographically-first norm; output order pinned
+        node_rows, edge_rows = probe
+        dictionary = {r["norm"]: r["entity"] for r in
+                      dict_df.select("norm", "entity").collect()}
+        roots = _min_roots((r["node"] for r in node_rows), edge_rows)
+        by_comp: dict[int, list[str]] = {}
+        for r in node_rows:
+            by_comp.setdefault(roots[r["node"]], []).append(r["norm"])
+        mapping = []
+        for members in by_comp.values():
+            linked = sorted(m for m in members if m in dictionary)
+            fallback = dictionary[linked[0]] if linked else min(members)
+            mapping += [(m, dictionary.get(m, fallback)) for m in members]
+        return norms.sparkSession.createDataFrame(
+            pd.DataFrame(sorted(mapping), columns=["norm", "entity"]),
+            "norm string, entity string")
 
     comps = connected_components(feats.select("node"), edges)
 
@@ -731,38 +757,3 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
                         F.coalesce("entity", "_cluster_entity", "_any_norm"))
             .select("norm", "entity"))
 
-
-def _name_clusters_driver(nodes: list[tuple[str, int]],
-                          edges: list[tuple[int, int]],
-                          dictionary: dict[str, str]) -> list[tuple]:
-    """Driver-side C3+C4: union-find over the collected edge set, then
-    the same naming rule as the distributed branch — own dict hit
-    first, else the dict entity of the cluster's lexicographically-
-    first LINKED norm, else the cluster's lexicographically-first
-    norm. Output order is pinned for determinism."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for s, d in edges:
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            parent[max(rs, rd)] = min(rs, rd)
-
-    by_comp: dict[int, list[str]] = {}
-    for norm, node in nodes:
-        by_comp.setdefault(find(node), []).append(norm)
-    out = []
-    for comp, members in by_comp.items():
-        linked = sorted(m for m in members if m in dictionary)
-        fallback = dictionary[linked[0]] if linked else min(members)
-        for m in members:
-            out.append((m, dictionary.get(m, fallback)))
-    out.sort()
-    return out

@@ -177,10 +177,7 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
 #: two-long struct key was 4-5× slower to probe than the packed
 #: long). Above the gate — the 100 TB regime — the shuffle semi-join
 #: on (a, c) runs exactly as before; output identical either way.
-import os as _os
-
-TRI_BCAST_MAX_EDGES = int(_os.environ.get("KG_TRI_BCAST_EDGES",
-                                          "50000000"))
+TRI_BCAST_MAX_EDGES = 50_000_000
 
 
 def triangle_counts(edges: DataFrame,
@@ -252,10 +249,13 @@ def triangle_counts(edges: DataFrame,
                      and stats["mn"] >= 0
                      and stats["mx"] < (1 << 31))
     if use_bcast:
+        # cast first: on an int column Java masks the shift amount to
+        # 0, so the key would be lo + hi and distinct edges collide
         close = F.broadcast(o.select(
-            (F.shiftleft(F.col("lo"), 32) + F.col("hi")).alias("_k")))
+            (F.shiftleft(F.col("lo").cast("long"), 32)
+             + F.col("hi")).alias("_k")))
         tri = (wedges
-               .withColumn("_k", F.shiftleft(F.col("a"), 32)
+               .withColumn("_k", F.shiftleft(F.col("a").cast("long"), 32)
                            + F.col("c"))
                .join(close, "_k", "semi").drop("_k"))
     else:

@@ -267,79 +267,6 @@ def _stream_score_fused(transcripts, weights_bc, close,
     return apply_type_signature(scored)
 
 
-def extract_and_score_conv_fused(
-    transcripts: DataFrame,
-    weights_bc,
-    k: int = 1,
-    threshold: float = spec.REL_THRESHOLD,
-    cap_per_turn: int = 8,
-    chunk: int = 256,
-) -> DataFrame:
-    """Intra-turn AND ±k cross-turn B1–B5 in ONE pass: the corpus is
-    scanned once, each turn tokenized and mention-scanned EXACTLY
-    ONCE after the (conv_id, chunk) exchange, feeding both the
-    intra-turn pair combinatorics (nlp.pair_instances — uncapped
-    mentions, same as the intra fused path) and the cross-turn window
-    (mentions capped at ``cap_per_turn``, same as
-    cross_turn_instances); one batched forward pass scores both
-    families together. Output ≡ extract_and_score_fused ∪
-    extract_and_score_cross_turn_fused (pinned in
-    tests/test_extract_score.py).
-
-    NOT the pipeline default (r5 measurement, local[32], sf0.1
-    transcripts): the union shape is ~25% faster here because its
-    intra and cross passes are independent Spark stages that overlap,
-    while this pass serializes ALL extraction CPU into the
-    post-shuffle stage. Choose this plan when the SCAN is the scarce
-    resource — very wide transcript rows, remote object storage, or
-    a pay-per-read source — and the ~2× read amplification of the
-    union shape outweighs stage overlap; at equal CPU-bound footing,
-    keep the union (pipeline.extract_and_score documents the same
-    tradeoff from the caller side)."""
-    from kg import nlp
-
-    def close(key, items):
-        conv_id = key[0]
-        rows = []
-        turns = []
-        for turn_idx, text in items:
-            toks = spec.tokenize(text or "")
-            mens = nlp.find_mentions(toks)
-            # intra-turn pairs: full mention list, pair cap inside
-            if len(mens) >= 2:
-                for pr in nlp.pair_instances(toks, mens):
-                    rows.append((conv_id, int(turn_idx),
-                                 pr["head_surface"], pr["tail_surface"],
-                                 pr["head_norm"], pr["tail_norm"],
-                                 pr["head_mtype"], pr["tail_mtype"],
-                                 pr["token_ids"], pr["head_pos"],
-                                 pr["tail_pos"], pr["head_canonical"],
-                                 pr["tail_canonical"]))
-            if mens:
-                turns.append((int(turn_idx), toks, mens[:cap_per_turn]))
-        # cross-turn pairs over the SAME tokenization
-        for i, (ti, toks_i, mens_i) in enumerate(turns):
-            for tj, toks_j, mens_j in turns[i + 1:]:
-                if tj - ti > k:
-                    break
-                joined = toks_i + ["."] + toks_j
-                ids = spec.token_ids(joined)
-                off = len(toks_i) + 1
-                for a in mens_i:
-                    for b in mens_j:
-                        rows.append((conv_id, ti,
-                                     a["surface"], b["surface"],
-                                     a["norm"], b["norm"],
-                                     a["mtype"], b["mtype"],
-                                     ids, a["span_start"],
-                                     b["span_start"] + off,
-                                     a["canonical"], b["canonical"]))
-        return rows
-
-    return _stream_score_fused(transcripts, weights_bc, close,
-                               threshold, chunk)
-
-
 def broadcast_weights(spark, params: dict | None = None,
                       encoder: str = "pcnn"):
     """Broadcast the frozen model once per job (npz-compressed bytes).

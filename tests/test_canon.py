@@ -103,7 +103,21 @@ def test_cc_star_long_chain(spark):
         [(i, i + 1, 1.0) for i in range(n - 1)], schema=schemas.EDGES)
     got = {r["node"]: r["component"]
            for r in canon.connected_components_star(
-               nodes, edges, max_iter=12).collect()}
+               nodes, edges).collect()}
+    assert got == {i: 0 for i in range(n)}
+
+
+def test_components_auto_long_chain_escalates_to_star(spark):
+    """An 80-node chain needs more hash-to-min rounds than
+    HASH_TO_MIN_ROUNDS allows; the distributed branch must escalate to
+    large/small-star by itself instead of raising."""
+    n = 80
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(n - 1)], schema=schemas.EDGES)
+    got = {r["node"]: r["component"]
+           for r in canon.components_auto(
+               nodes, edges, driver_max_nodes=0).collect()}
     assert got == {i: 0 for i in range(n)}
 
 

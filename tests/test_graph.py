@@ -145,3 +145,11 @@ def test_triangle_counts_bipartite_is_empty(spark):
         [(a, b) for a in range(3) for b in range(10, 13)],
         "src long, dst long")
     assert graph.triangle_counts(edges).count() == 0
+
+
+def test_triangle_counts_int_ids_no_phantom(spark):
+    # triangle-free path; with int ids a 32-bit shift of an int column
+    # is a no-op in Java, so unpacked keys a + c collide across edges
+    edges = spark.createDataFrame(
+        [(11, 13), (11, 14), (12, 13), (12, 15)], "src int, dst int")
+    assert graph.triangle_counts(edges).count() == 0

@@ -19,15 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def calib() -> float:
-    import numpy as np
-
-    a = np.full((600, 600), 1.0 / 600, dtype=np.float64)
-    t0 = time.perf_counter()
-    for _ in range(30):
-        a = a @ a
-    return round(time.perf_counter() - t0, 3)
+from bench_extra import calib  # noqa: E402
 
 
 def main() -> None:
@@ -57,7 +49,7 @@ def main() -> None:
         clean, raw = [], []
         tries = 0
         while len(clean) < args.accept and tries < args.max_tries:
-            c0 = calib()
+            c0 = calib()["calibration_sec"]
             if c0 >= args.calib_max:
                 time.sleep(args.wait_secs)
                 continue
@@ -67,7 +59,7 @@ def main() -> None:
             fn(spark, args.sf_dir).write.mode("overwrite") \
                 .format("noop").save()
             dt = round(time.perf_counter() - t0, 3)
-            c1 = calib()
+            c1 = calib()["calibration_sec"]
             spark.catalog.clearCache()
             raw.append({"sec": dt, "calib_before": c0, "calib_after": c1})
             if c1 < args.calib_max:
