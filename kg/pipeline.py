@@ -13,10 +13,14 @@ Dataflow at scale (the plan you'd want on 1000 executors):
         map-side combined)
       → groupBy(subj) agg (D3; second shuffle, key-clustered sink)
 
-The extraction path is shuffle-free: per-turn work needs no
+At k = 0 the extraction path is shuffle-free: per-turn work needs no
 co-location, so 10^12 turns parallelize embarrassingly; the only
 exchanges are the final aggregations over already-tiny triple
-occurrences.
+occurrences. A ±k cross-turn window (k ≥ 1) adds one (conv_id, chunk)
+exchange — none with ``clustered_input`` — and the same single
+mapInPandas then scores each turn's intra-turn pairs together with
+its cross-turn pairs, so each turn is still tokenized and scanned
+once.
 """
 
 from __future__ import annotations
@@ -82,35 +86,32 @@ def extract_and_score(spark: SparkSession, transcripts: DataFrame,
                       threshold: float = spec.REL_THRESHOLD,
                       cross_turn_k: int = 0,
                       clustered_input: bool = False) -> DataFrame:
-    """B1–B5 extraction. ``cross_turn_k > 0`` additionally scores
-    mention pairs spanning ≤ k turns within a conversation (B3's ±k
-    window, score.extract_and_score_cross_turn_fused): one extra
-    conv-keyed shuffle, with pairing/scoring/exact-linking fused into
-    that pass's single streaming mapInPandas; the frozen scorers were
+    """B1–B5 extraction. ``cross_turn_k = 0`` runs the shuffle-free
+    intra-turn scorer (score.extract_and_score_fused). ``cross_turn_k
+    > 0`` additionally scores mention pairs spanning ≤ k turns within
+    a conversation (B3's ±k window): ONE conv-keyed exchange feeds ONE
+    streaming mapInPandas that tokenizes and mention-scans each turn
+    once and scores its intra-turn pairs together with the window's
+    cross-turn pairs (score._extract_and_score_window_fused). Its rows
+    equal ``extract_and_score_fused ∪
+    extract_and_score_cross_turn_fused``, at half the Python tasks of
+    running the two and taking the union. The frozen scorers were
     trained on intra-turn instances, so cross-turn pairs score
     conservatively (mostly NA) — the wiring is the capability, a
-    cross-turn-trained checkpoint is the tuning knob."""
+    cross-turn-trained checkpoint is the tuning knob.
+
+    ``clustered_input``: the caller vouches the storage layout
+    contains each conversation in one scan partition (conv-bucketed
+    write / Iceberg bucket(conv_id)); the k ≥ 1 pass then runs with
+    NO exchange at all. See extract.cross_turn_prepared for the
+    contract."""
     if weights_bc is None:
         weights_bc = score.broadcast_weights(spark)
-    fused = score.extract_and_score_fused(transcripts, weights_bc,
-                                          threshold=threshold)
     if not cross_turn_k:
-        return fused
-    # r5: the cross-turn window runs as ONE fused streaming
-    # mapInPandas (pairing + scoring + exact linking in the same
-    # Python worker — was three chained stages with token_ids paying
-    # an extra Arrow round-trip, then two broadcast joins), unioned
-    # with the shuffle-free intra pass; both fused scorers are
-    # equivalence-pinned in tests/test_extract_score.py.
-    # clustered_input: the caller vouches the storage layout contains
-    # each conversation in one scan partition (conv-bucketed write /
-    # Iceberg bucket(conv_id)); the cross-turn pass then runs with NO
-    # exchange at all — at 10^12 turns that is the whole corpus not
-    # shuffled. See extract.cross_turn_prepared for the contract.
-    xfused = score.extract_and_score_cross_turn_fused(
-        transcripts, weights_bc, k=cross_turn_k, threshold=threshold,
-        clustered_input=clustered_input)
-    return fused.unionByName(xfused)
+        return score.extract_and_score_fused(transcripts, weights_bc,
+                                             threshold=threshold)
+    return score._extract_and_score_window_fused(
+        transcripts, weights_bc, cross_turn_k, threshold, clustered_input)
 
 
 def run(spark: SparkSession, transcripts: DataFrame,

@@ -721,6 +721,12 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
         # lexicographically-first LINKED norm, else the cluster's
         # lexicographically-first norm; output order pinned
         node_rows, edge_rows = probe
+        # the probe collected everything the mapping needs and the
+        # result below is a local frame: both caches are dead (the
+        # distributed branch keeps them — its output reads feats
+        # lazily)
+        feats.unpersist()
+        banded.unpersist()
         dictionary = {r["norm"]: r["entity"] for r in
                       dict_df.select("norm", "entity").collect()}
         roots = _min_roots((r["node"] for r in node_rows), edge_rows)

@@ -18,6 +18,9 @@ without recomputing finished partitions"):
   committed buckets are never touched or recomputed. The input-side
   pruning is a bucket-id filter, i.e. the anti-join of finished work
   happens on a tiny integer set, not on data rows.
+- Each commit batch runs the stage function (extraction) on its own
+  buckets, by design: every batch starts its own set of Python tasks,
+  and that is what bounds the work a kill can lose to one batch.
 
 On a real Iceberg deployment the same class routes the group commit
 through ``writeTo(...).append()`` with the manifest in a table

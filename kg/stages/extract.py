@@ -2,6 +2,10 @@
 (SURVEY.md §2 B). One Arrow round-trip: a single ``mapInPandas`` does
 tokenize → gazetteer scan → intra-turn pair combinatorics per batch,
 so each turn's text crosses the JVM↔Python boundary exactly once.
+With a ±k cross-turn window the same holds: one streaming pass over
+the conversation-keyed exchange scans each turn once and emits its
+intra-turn pairs beside the cross-turn ones
+(:func:`window_group_pairs`).
 
 The gazetteer is rebuilt from :mod:`kg.spec` on each executor process
 (module-level cache — shipped via --py-files, zero serialization), per
@@ -131,15 +135,43 @@ def xt_group_pairs(conv_id, items: list, k: int,
     close function shared by cross_turn_instances and the fused
     scorer in kg/stages/score.py): tokenize each turn once, pair
     mentions across turns ≤ k apart, emit XT_PAIR_COLS tuples."""
+    return _group_pairs(conv_id, items, k, cap_per_turn, intra=False)
+
+
+def window_group_pairs(conv_id, items: list, k: int,
+                       cap_per_turn: int) -> list:
+    """One conversation-chunk's intra- AND cross-turn pairs from a
+    single tokenize + mention scan per turn (the close function of
+    the k ≥ 1 single-pass scorer in kg/stages/score.py).
+
+    Each turn first yields its intra-turn pairs exactly as the
+    intra-turn fused scorer builds them (``nlp.pair_instances`` over
+    ALL the turn's mentions, only when there are ≥ 2); the cross-turn
+    pairs of :func:`xt_group_pairs` follow. Both kinds in one pass,
+    so a k ≥ 1 run scans each turn once instead of once per scorer."""
+    return _group_pairs(conv_id, items, k, cap_per_turn, intra=True)
+
+
+def _group_pairs(conv_id, items: list, k: int, cap_per_turn: int,
+                 intra: bool) -> list:
+    """The pairing loop behind both close functions above: per turn,
+    tokenize + mention scan once (intra-turn pairs if ``intra``);
+    then pair the first ``cap_per_turn`` mentions of turns ≤ k
+    apart."""
     from kg import nlp, spec
 
+    rows = []
     turns = []
     for turn_idx, text in items:
         toks = spec.tokenize(text or "")
-        mens = nlp.find_mentions(toks)[:cap_per_turn]
-        if mens:
-            turns.append((int(turn_idx), toks, mens))
-    rows = []
+        mens = nlp.find_mentions(toks)
+        if not mens:
+            continue
+        ti = int(turn_idx)
+        if intra and len(mens) >= 2:
+            rows += [(conv_id, ti) + tuple(p[c] for c in XT_PAIR_COLS[2:])
+                     for p in nlp.pair_instances(toks, mens)]
+        turns.append((ti, toks, mens[:cap_per_turn]))
     for i, (ti, toks_i, mens_i) in enumerate(turns):
         for tj, toks_j, mens_j in turns[i + 1:]:
             if tj - ti > k:
@@ -206,7 +238,7 @@ def clustered_layout_ok(df: DataFrame) -> bool:
 def cross_turn_prepared(transcripts: DataFrame,
                         chunk: int = 256,
                         clustered_input: bool = False) -> DataFrame:
-    """The shared exchange under both cross-turn consumers: narrow
+    """The shared exchange under every cross-turn consumer: narrow
     projection + ONE shuffle on (conv_id, chunk) + in-partition sort,
     ready for a streaming mapInPandas over group boundaries.
 

@@ -10,16 +10,23 @@ known entity when their cluster contains a linked member.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kg import spec
 
 
 def dictionary_df(spark: SparkSession) -> DataFrame:
-    """The linking dictionary as a (norm, entity, entity_mtype) frame."""
+    """The linking dictionary as a (norm, entity, entity_mtype) frame.
+
+    Built from pandas, so the plan is a ``LocalTableScan`` on the
+    driver: a list of tuples would plan as a PythonRDD scan, and
+    every scan of it (canon's node probe, the driver naming step)
+    would start one Python worker task per partition."""
     rows = [(n, c, m) for n, (c, m) in spec.linking_dictionary().items()]
-    return spark.createDataFrame(rows, "norm string, entity string, "
-                                       "entity_mtype string")
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["norm", "entity", "entity_mtype"]),
+        "norm string, entity string, entity_mtype string")
 
 
 def link_exact(df: DataFrame, dict_df: DataFrame, norm_col: str,

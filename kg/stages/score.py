@@ -134,6 +134,11 @@ def extract_and_score_fused(
     column — through an extra JVM↔Python Arrow round-trip; the
     downstream linking joins then re-scanned the scored table. The
     unfused stages remain for unit tests and the driver contract.
+
+    This is pipeline.extract_and_score's k = 0 path: map-only, no
+    exchange. With k ≥ 1 the pipeline instead runs
+    :func:`_extract_and_score_window_fused`, which emits these same
+    intra-turn rows from the cross-turn window's one streaming pass.
     """
     rels = np.array(spec.RELATIONS)
     na_id = spec.REL_TO_ID[spec.NA_RELATION]
@@ -206,11 +211,51 @@ def extract_and_score_cross_turn_fused(
     on, pinned in tests/test_extract_score.py for this path too).
     Same single (conv_id, chunk) exchange as the pairing pass; zero
     additional shuffles or joins.
+
+    The pipeline does not union this with the intra-turn scorer: its
+    k ≥ 1 path is :func:`_extract_and_score_window_fused`, one pass
+    that emits both pair kinds. This function stays as the cross-turn
+    reference that pass is pinned against.
     """
     from kg.stages import extract
 
     def close(key, items):
         return extract.xt_group_pairs(key[0], items, k, cap_per_turn)
+
+    return _stream_score_fused(transcripts, weights_bc, close,
+                               threshold, chunk, clustered_input)
+
+
+def _extract_and_score_window_fused(
+    transcripts: DataFrame,
+    weights_bc,
+    k: int,
+    threshold: float,
+    clustered_input: bool,
+    cap_per_turn: int = 8,
+    chunk: int = 256,
+) -> DataFrame:
+    """The k ≥ 1 extraction of pipeline.extract_and_score in ONE
+    streaming pass: rows equal to ``extract_and_score_fused ∪
+    extract_and_score_cross_turn_fused`` at the latter's default
+    ``cap_per_turn``/``chunk`` (pinned in tests/test_extract_score.py),
+    from a single exchange and a single mapInPandas.
+
+    The close function (extract.window_group_pairs) tokenizes and
+    mention-scans each turn once and emits that turn's intra-turn
+    pairs beside the window's cross-turn pairs; both kinds are scored
+    in each flush's one model pass. Running the two scorers and
+    taking their union instead processes every turn twice, in twice
+    the Python tasks — and a Python task costs a fixed ~0.2 CPU-s
+    before its first row (see skew.cpu_stage_partitions). The
+    intra-turn pairs need no co-location, but the conversation
+    exchange is already paid for the cross-turn window, so they ride
+    it at no extra shuffle.
+    """
+    from kg.stages import extract
+
+    def close(key, items):
+        return extract.window_group_pairs(key[0], items, k, cap_per_turn)
 
     return _stream_score_fused(transcripts, weights_bc, close,
                                threshold, chunk, clustered_input)

@@ -137,7 +137,19 @@ def cpu_stage_partitions(df: DataFrame) -> int:
     targets ~64 MB of shuffle data per task, which undersizes stages
     whose cost is Python CPU per row rather than bytes (measured r5:
     the cross-turn exchange at sf0.1 coalesced 32 → 3 tasks, leaving
-    29 cores idle under ~5 s of single-core NLP work)."""
+    29 cores idle under ~5 s of single-core NLP work).
+
+    The other side of the trade: every Python task also pays a fixed
+    cost before it reads a row. PySpark's worker calls
+    ``importlib.invalidate_caches()`` per task (worker_util
+    .setup_spark_files), and on CPython 3.11 each cached zipimporter
+    (pyspark.zip, the py4j zip, the spark-core jar) then re-reads its
+    archive directory: 180–250 ms of CPU per task, measured inside a
+    worker on a 4-core VM. At small per-stage inputs that fixed cost,
+    not rows, is what a Python stage spends, so the number of Python
+    tasks a run starts is the design metric — stages are fused so
+    that one task does the work of several (pipeline.extract_and_score
+    scores intra- and cross-turn pairs in one pass for this reason)."""
     spark = df.sparkSession
     conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(conf, spark.sparkContext.defaultParallelism)

@@ -174,6 +174,20 @@ def test_canonicalize_norms_end_to_end(spark):
         == "zzzz wobbleplex"
 
 
+def test_canonicalize_norms_driver_branch_releases_caches(spark):
+    """The driver branch returns a local frame, so the feature and
+    band tables it persisted are dead once the mapping is built: they
+    must not stay in the cache manager (one leaked pair per
+    resolve_entities call otherwise)."""
+    spark.catalog.clearCache()
+    norms = spark.createDataFrame(
+        [("acme corp",), ("acme corpp",), ("zzzz wobbleplex",)],
+        "norm string")
+    out = canon.canonicalize_norms(norms, dictionary_df(spark)).collect()
+    assert len(out) == 3
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_canonicalize_driver_path_equals_distributed(spark):
     """The driver-side C3+C4 fast path (small node sets) must be
     byte-identical to the distributed join/aggregate branch."""

@@ -102,6 +102,19 @@ def test_link_exact_broadcast(spark):
     assert by["unknown thing"]["head_entity"] is None
 
 
+def test_dictionary_df_is_local(spark):
+    """The linking dictionary holds exactly spec.linking_dictionary()
+    and plans as a LocalTableScan: an RDD-backed frame would start
+    Python worker tasks on every scan."""
+    d = link.dictionary_df(spark)
+    assert {r["norm"]: (r["entity"], r["entity_mtype"])
+            for r in d.collect()} == spec.linking_dictionary()
+    assert d.count() == len(spec.linking_dictionary())
+    plan = d._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
 def test_stream_groups_state_machine():
     """The shared streaming group-by (kg/stages/grouped.py) behind
     cross_turn_instances and score_bags: groups spanning Arrow batch
@@ -247,6 +260,44 @@ def test_clustered_input_equals_shuffle_path(spark, tmp_path):
             for r in df.collect())
 
     assert key_rows(fa) == key_rows(fb)
+
+
+def test_single_pass_k1_equals_union_of_fused_scorers(spark, tmp_path):
+    """pipeline.extract_and_score(k=1) runs ONE streaming pass that
+    scores intra- and cross-turn pairs together; its rows must equal
+    the union of the two reference scorers, on a shuffled input and
+    on a conv-bucketed input read with clustered_input=True.
+    threshold=0 keeps every non-NA score, so any pairing, offset or
+    linking divergence between the passes shows."""
+    from kg import datagen, pipeline
+
+    pdf, _ = datagen.generate(n_conversations=120, seed=13,
+                              pct_cross_turn=0.2)
+    t0 = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
+    path = str(tmp_path / "bucketed")
+    t0.repartition(4, "conv_id").write.parquet(path)
+    bc = score.broadcast_weights(spark)
+
+    def key_rows(df):
+        return sorted(
+            (r["conv_id"], r["turn_idx"], r["head_surface"],
+             r["tail_surface"], r["head_norm"], r["tail_norm"],
+             r["head_mtype"], r["tail_mtype"], r["head_pos"],
+             r["tail_pos"], r["rel"], round(float(r["score"]), 5),
+             r["head_entity"], r["tail_entity"])
+            for r in df.collect())
+
+    for src, clustered in ((t0.repartition(5), False),
+                           (spark.read.parquet(path), True)):
+        single = pipeline.extract_and_score(
+            spark, src, bc, threshold=0.0, cross_turn_k=1,
+            clustered_input=clustered)
+        intra = key_rows(score.extract_and_score_fused(
+            src, bc, threshold=0.0))
+        cross = key_rows(score.extract_and_score_cross_turn_fused(
+            src, bc, k=1, threshold=0.0, clustered_input=clustered))
+        assert intra and cross  # both pair kinds are exercised
+        assert key_rows(single) == sorted(intra + cross)
 
 
 def test_clustered_layout_ok_guard(spark, tmp_path):

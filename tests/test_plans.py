@@ -187,6 +187,33 @@ def test_clustered_cross_turn_plan_has_no_exchange(spark, tmp_path):
     assert "Sort (" in plan  # the in-partition sort survives
 
 
+def test_k1_extraction_is_one_streaming_pass(spark, tmp_path):
+    """pipeline.extract_and_score with k=1 must be ONE MapInPandas
+    after ONE exchange — intra- and cross-turn pairs scored in the
+    same pass, not two scorers and a Union (twice the Python tasks,
+    each turn tokenized twice). With clustered_input=True the
+    exchange goes too."""
+    from kg import datagen, pipeline, schemas
+
+    pdf, _ = datagen.generate(n_conversations=10, seed=3)
+    t0 = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
+    plan = _plan(pipeline.extract_and_score(spark, t0, cross_turn_k=1))
+    # tree form "Name (n)" counts each node once
+    assert plan.count("MapInPandas (") == 1, plan
+    assert plan.count("Exchange (") == 1, plan
+    assert "Union" not in plan, plan
+    assert "Join" not in plan, plan
+
+    path = str(tmp_path / "bucketed")
+    t0.repartition(2, "conv_id").write.parquet(path)
+    plan = _plan(pipeline.extract_and_score(
+        spark, spark.read.parquet(path), cross_turn_k=1,
+        clustered_input=True))
+    assert plan.count("MapInPandas (") == 1, plan
+    assert "Exchange (" not in plan, plan
+    assert "Union" not in plan, plan
+
+
 def test_kmeans_assign_data_path_is_exchange_free(spark):
     """The Lloyd assignment must not shuffle the vector scan: an
     earlier draft's per-vector row_number window silently added
